@@ -46,6 +46,24 @@ object Bench {
       Seq("pgrep", "-f", "scripts/check.py").!(ProcessLogger(_ => ())) == 0
     } catch { case scala.util.control.NonFatal(_) => false }
 
+  /** One query's result: its min-over-reps seconds, or -1 with the
+    * exception class of its first failed rep. */
+  final case class Outcome(name: String, seconds: Double, failure: Option[String])
+
+  /** The one-line JSON record. A failed query reads -1 in `queries` and
+    * is left out of `value`; `failed_count` and `failed` (name →
+    * exception class) make the failure set visible in the line itself,
+    * so a query that throws can never pass as a faster run. */
+  def summaryLine(results: Seq[Outcome], reps: Int, sfDir: String,
+                  loadBefore: String, loadAfter: String, sweep: Boolean): String = {
+    val qs = results.map(r => "\"" + r.name + f"""\":${r.seconds}%.3f""")
+      .mkString("{", ",", "}")
+    val total = results.map(_.seconds).filter(_ >= 0).sum
+    val failed = results.collect { case Outcome(n, _, Some(cls)) =>
+      "\"" + n + "\":\"" + cls + "\"" }
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"reps":$reps,"sf":"$sfDir","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","oracle_sweep_running":$sweep,"failed_count":${failed.size},"failed":${failed.mkString("{", ",", "}")}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -74,26 +92,27 @@ object Bench {
     val names = headline.filter(SparkEntry.queries.contains)
       .filter(n => only.forall(_.contains(n)))
     val results = names.map { name =>
-      val times = (1 to reps).map { _ =>
+      val runs = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        val ok =
+        val failure =
           try {
             SparkEntry.queries(name)(spark, sfDir)
               .write.mode("overwrite").format("noop").save()
-            true
-          } catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (ok) dt else -1.0
+            None
+          } catch { case e: Throwable => Some(e.getClass.getName) }
+        ((System.nanoTime() - t0) / 1e9, failure)
       }
       // any failed rep marks the query failed; otherwise min over reps
-      name -> (if (times.exists(_ < 0)) -1.0 else times.min)
+      val failure = runs.flatMap(_._2).headOption
+      Outcome(name, if (failure.isDefined) -1.0 else runs.map(_._1).min, failure)
     }
-    val qs = results.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
     val loadAfter = loadavg()
     val sweep = sweepAtStart || sweepRunning()
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"reps":$reps,"sf":"$sfDir","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","oracle_sweep_running":$sweep}"""
+    val line = summaryLine(results, reps, sfDir, loadBefore, loadAfter, sweep)
+    val failed = results.filter(_.failure.isDefined)
+    if (failed.nonEmpty)
+      System.err.println(s"graft.Bench: FAILED (left out of the total): " +
+        failed.map(r => s"${r.name} (${r.failure.get})").mkString(", "))
     println(line)
     // also persist the record to a file: the driver captures stdout via a
     // bounded tail, and a long per-query map has been truncated there once

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{ColumnExpr, SessionIsolation}
 
 import graft.operators.Upsert
 
@@ -1109,7 +1110,8 @@ object ManifestTable {
   }
 
   private def listGeneration(spark: SparkSession, root: String, gen: String,
-                             tags: Map[String, String] = Map.empty)
+                             tags: Map[String, String] = Map.empty,
+                             dropEmpty: Boolean = false)
       : Seq[FileEntry] = {
     val fs = fsOf(spark, root)
     val qualified = fs.makeQualified(new Path(root, gen))
@@ -1160,7 +1162,17 @@ object ManifestTable {
           }
         }.toSeq
       }
-    attachNdvSketches(spark, root, gen, entries, tags)
+    // a DML result may hold no rows and is written without a pre-pass
+    // asking: the files its empty tasks leave (footer count 0) go here,
+    // before the sketch pass; unknown counts (-1) stay
+    val kept =
+      if (!dropEmpty) entries
+      else {
+        val (empty, nonEmpty) = entries.partition(_.rows == 0)
+        empty.foreach(e => fs.delete(new Path(root, e.relPath), false))
+        nonEmpty
+      }
+    attachNdvSketches(spark, root, gen, kept, tags)
   }
 
   /** Shared driver pool for commit-time footer reads — session-lifetime
@@ -1427,7 +1439,8 @@ object ManifestTable {
 
   private def writeGeneration(df: DataFrame, root: String,
                               partitionCols: Seq[String],
-                              tags: Map[String, String] = Map.empty)
+                              tags: Map[String, String] = Map.empty,
+                              dropEmpty: Boolean = false)
       : (String, Seq[FileEntry]) = {
     val gen = s"gen-${java.util.UUID.randomUUID().toString.take(12)}"
     val genPath = new Path(root, gen)
@@ -1468,7 +1481,23 @@ object ManifestTable {
     if (partitionCols.forall(micros.schema.fieldNames.contains))
       graft.core.SchemaMemo.put(df.sparkSession, genPath.toString,
         readBackSchema(micros.schema, partitionCols))
-    (gen, listGeneration(df.sparkSession, root, gen, tags))
+    (gen, listGeneration(df.sparkSession, root, gen, tags, dropEmpty))
+  }
+
+  /** [[writeGeneration]] for a DML result that may hold no rows (every
+    * row of the touched files deleted, nothing inserted): the plan runs
+    * ONCE, in the write, instead of once more up front to ask whether
+    * it is empty. Zero-row files are dropped and a generation left with
+    * none is deleted: no entries and no generation dir (an empty one
+    * would be unlistable noise). */
+  private def writeRows(df: DataFrame, root: String, partitionCols: Seq[String],
+                        tags: Map[String, String]): (Seq[FileEntry], Option[String]) = {
+    val (gen, entries) = writeGeneration(df, root, partitionCols, tags, dropEmpty = true)
+    if (entries.nonEmpty) (entries, Some(gen))
+    else {
+      fsOf(df.sparkSession, root).delete(new Path(root, gen), true)
+      (Seq.empty, None)
+    }
   }
 
   /** The schema a fresh [[genFrame]] construction would INFER for a
@@ -1529,9 +1558,9 @@ object ManifestTable {
       (if (lowCoalesceFloor)
         Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k")
       else Nil)
-    val iso = org.apache.spark.sql.graftshim.SessionIsolation.sessionWithConf(
+    val iso = SessionIsolation.sessionWithConf(
       df.sparkSession, confs: _*)
-    org.apache.spark.sql.graftshim.SessionIsolation.rebind(df, iso)
+    SessionIsolation.rebind(df, iso)
   }
 
   /** Read the table at its newest committed version. Files are grouped by
@@ -1652,7 +1681,7 @@ object ManifestTable {
     * join, so `fact JOIN dim WHERE dim.filter` scans every fact file even
     * when the filtered dim matches a sliver of the key space. Here the
     * (bounded) dim key set is collected to the driver, fact files are
-    * pruned by per-key-column `isin` against manifest stats + partition
+    * pruned by per-key-column `IN` against manifest stats + partition
     * values, and the surviving rows are LEFT SEMI joined against the
     * exact key tuples — so the result is always identical to
     * `read(...).join(dim.select(keys).distinct(), cond, "left_semi")`,
@@ -1681,14 +1710,15 @@ object ManifestTable {
         "dynamic file pruning skipped (falling back to the unpruned semi-join)")
       semi(read(spark, root))
     } else {
-      // per-column isin: conjunct-shaped so DataSkipping can evaluate it
+      // per-column IN: conjunct-shaped so DataSkipping can evaluate it
       // per file (a tuple-wise OR-of-ANDs is opaque to the conjunct
       // compiler); per-column is a SUPERSET of the tuple match, which the
-      // exact semi-join below then tightens — and the same isin reaches
-      // the parquet scan for row-group pruning on the surviving files
+      // exact semi-join below then tightens — and the same IN reaches
+      // the parquet scan for row-group pruning on the surviving files.
+      // One catalyst In per column, not one Column per key value
       val perCol = on.zipWithIndex.map { case ((fc, _), i) =>
         val vs = collected.map(_.get(i)).filter(_ != null).distinct
-        if (vs.isEmpty) lit(false) else col(fc).isin(vs.toIndexedSeq: _*)
+        if (vs.isEmpty) lit(false) else ColumnExpr.isIn(col(fc), vs.toIndexedSeq)
       }.reduce(_ && _)
       semi(readWhere(spark, root, perCol))
     }
@@ -2019,6 +2049,21 @@ object ManifestTable {
     * of its files predates per-file row counts. */
   def rowCountAt(spark: SparkSession, root: String, version: Long): Option[Long] =
     stateAt(spark, root, version).flatMap(stateRowCount)
+
+  /** Live rows per partition value of `files` under the layout `keys`,
+    * from the manifest alone: [[Writers.sizedRewrite]]'s sizing input
+    * without a counting scan. None — the writer counts by scan — when a
+    * file has no row count, a layout column is typed (it reads back as
+    * its declared type, not the directory string), or a file's
+    * directories do not spell exactly `keys` (mixed spec eras). */
+  private def valueRows(st: State, files: Seq[FileEntry], keys: Seq[String])
+      : Option[Seq[(Seq[Option[String]], Long)]] = {
+    val typed = partitionTypes(st.tags).keySet.map(_.toLowerCase(java.util.Locale.ROOT))
+    val counted = files.map(f => (f.partitionValues, fileLiveRows(f)))
+    if (keys.exists(k => typed.contains(k.toLowerCase(java.util.Locale.ROOT))) ||
+        counted.exists { case (pv, n) => n.isEmpty || pv.keySet != keys.toSet }) None
+    else Some(counted.groupMapReduce { case (pv, _) => keys.map(pv) }(_._2.get)(_ + _).toSeq)
+  }
 
   private def stateRowCount(st: State): Option[Long] = {
     val perFile = st.files.map(fileLiveRows)
@@ -2566,8 +2611,8 @@ object ManifestTable {
     if (inv.isEmpty) predicate
     else {
       import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-      val e = org.apache.spark.sql.graftshim.ColumnExpr.expression(predicate)
-      org.apache.spark.sql.graftshim.ColumnExpr.column(e.transform {
+      val e = ColumnExpr.expression(predicate)
+      ColumnExpr.column(e.transform {
         case a: UnresolvedAttribute
           if a.nameParts.length == 1 && inv.contains(a.nameParts.head) =>
           UnresolvedAttribute(Seq(inv(a.nameParts.head)))
@@ -3288,9 +3333,10 @@ object ManifestTable {
     // the same derive/verify/coalesce contract as every other write
     // boundary: a CTAS frame that SUPPLIES disagreeing values for a
     // generated column must refuse, not seed a corrupt layout
+    val dfL = SessionIsolation.detachLocal(df)
     val dfG =
-      if (genSpecs.isEmpty) df
-      else applyGenerated(df,
+      if (genSpecs.isEmpty) dfL
+      else applyGenerated(dfL,
         Map(GeneratedTag -> encodeGenerated(genSpecs)), root, "overwrite batch")
     val spark = df.sparkSession
     val fs = fsOf(spark, root)
@@ -3521,8 +3567,8 @@ object ManifestTable {
              checkpointInterval: Int = DefaultCheckpointInterval,
              tags: Map[String, String] = Map.empty,
              partitionCols: Seq[String] = Nil): Long =
-    appendFrom(spark, batch, root, graceMs, checkpointInterval, tags,
-      partitionCols, current(spark, root))
+    appendFrom(spark, SessionIsolation.detachLocal(batch), root, graceMs,
+      checkpointInterval, tags, partitionCols, current(spark, root))
 
   /** [[append]] body against an already-read `prior` state — the
     * streaming sink reuses its watermark read (one manifest-log listing
@@ -3698,7 +3744,8 @@ object ManifestTable {
     val expected = logical.fieldNames.toSeq
     // dynamic overwrite on a generated layout: a batch of raw rows
     // derives its day/bucket column here and replaces those partitions
-    val batchG = applyGenerated(batch, st.tags, root, "overwrite batch")
+    val batchG = applyGenerated(SessionIsolation.detachLocal(batch), st.tags, root,
+      "overwrite batch")
     val got = batchG.columns.toSeq
     require(got.map(_.toLowerCase).sorted == expected.map(_.toLowerCase).sorted,
       s"manifest table $root: overwrite batch columns [${got.sorted.mkString(", ")}] " +
@@ -3771,8 +3818,8 @@ object ManifestTable {
                   tags: Map[String, String] = Map.empty,
                   mergeSchema: Boolean = false,
                   checkpointInterval: Int = DefaultCheckpointInterval): Long =
-    upsertFrom(spark, fresh, root, keys, order, partitionCols, graceMs, tags,
-      mergeSchema, current(spark, root), checkpointInterval)
+    upsertFrom(spark, SessionIsolation.detachLocal(fresh), root, keys, order,
+      partitionCols, graceMs, tags, mergeSchema, current(spark, root), checkpointInterval)
 
   /** [[upsertDedup]] with the documented CAS retry loop BUILT IN: on
     * [[ConcurrentCommitException]] the whole read-merge-write re-runs
@@ -4097,8 +4144,9 @@ object ManifestTable {
   val DefaultCheckpointInterval: Int = 10
 
   /** Compact the live file set into ~targetFileMB files (skew-aware, via
-    * [[Writers.sizedRewrite]]) in one new generation; the manifest
-    * shrinks with the files. Compare-and-swap like [[upsertDedup]].
+    * [[Writers.sizedRewrite]], sized from the manifest's live row counts
+    * per partition value — see [[valueRows]]) in one new generation; the
+    * manifest shrinks with the files. Compare-and-swap like [[upsertDedup]].
     * Always commits a FULL snapshot (it rewrites every file anyway) and
     * advances the `_last_checkpoint` pointer. */
   def compact(spark: SparkSession, root: String, targetFileMB: Int = 512,
@@ -4117,7 +4165,8 @@ object ManifestTable {
     val genPath = new Path(root, gen)
     // readState is the LOGICAL view; rewrites must land physical names
     val micros = withMicrosTimestamps(physicalizeDf(df, st.tags))
-    Writers.sizedRewrite(micros.sparkSession, micros, bytes, keys, targetFileMB, genPath.toString)
+    Writers.sizedRewrite(micros.sparkSession, micros, bytes, keys, targetFileMB,
+      genPath.toString, valueRows(st, st.files, keys))
     val entries = listGeneration(spark, root, gen, st.tags)
     commitRewrite(spark, fs, root, st, gen, entries, graceMs)
   }
@@ -4167,7 +4216,8 @@ object ManifestTable {
     val fs = fsOf(spark, root)
     val st = current(spark, root).getOrElse(
       sys.error(s"manifest table $root has no committed version"))
-    val aligned = alignToTable(batch, root, st, "replaceWhere batch")
+    val aligned = alignToTable(SessionIsolation.detachLocal(batch), root, st,
+      "replaceWhere batch")
     val outside = aligned.filter(!coalesce(predicate, lit(false)))
     require(outside.isEmpty,
       s"replaceWhere on $root: the batch contains rows that do NOT satisfy " +
@@ -4181,22 +4231,13 @@ object ManifestTable {
       else {
         val partKeys = rewriteLayout(root, st, touched)
         val touchedDf = readState(spark, root, st.copy(files = touched))
-        val kept = normalizePartitionCols(
-          touchedDf.filter(!coalesce(predicate, lit(false))), partKeys)
-        if (kept.isEmpty) (Seq.empty[FileEntry], None)
-        else {
-          val (g, es) = writeGeneration(kept, root, partKeys, st.tags)
-          (es, Some(g))
-        }
+        writeRows(normalizePartitionCols(
+          touchedDf.filter(!coalesce(predicate, lit(false))), partKeys),
+          root, partKeys, st.tags)
       }
     val layout = layoutOf(root, st)
     val (batchEntries, batchGen) =
-      if (aligned.isEmpty) (Seq.empty[FileEntry], None)
-      else {
-        val (g, es) = writeGeneration(
-          normalizePartitionCols(aligned, layout), root, layout, st.tags)
-        (es, Some(g))
-      }
+      writeRows(normalizePartitionCols(aligned, layout), root, layout, st.tags)
     val entries = keptEntries ++ batchEntries
     require(entries.nonEmpty || touched.size < st.files.size,
       s"replaceWhere would leave $root without a single live file — a " +
@@ -4536,13 +4577,9 @@ object ManifestTable {
     require(layouts.size <= 1,
       s"materializeDeletes: inconsistent partition layouts in $root: $layouts")
     val partKeys = layouts.headOption.getOrElse(Seq.empty)
-    val kept = readState(spark, root, st.copy(files = dvd))
+    // no entries when every row was deleted
     val (entries, gen) =
-      if (kept.isEmpty) (Seq.empty[FileEntry], None) // every row was deleted
-      else {
-        val (g, es) = writeGeneration(kept, root, partKeys, st.tags)
-        (es, Some(g))
-      }
+      writeRows(readState(spark, root, st.copy(files = dvd)), root, partKeys, st.tags)
     require(entries.nonEmpty || dvd.size < st.files.size,
       s"materializeDeletes would leave $root file-less — a full-table clear " +
         "is a rewrite: use write() with the replacement content")
@@ -4723,66 +4760,53 @@ object ManifestTable {
   final case class SourceMissUpdate(set: Map[String, org.apache.spark.sql.Column])
     extends WhenNotMatchedBySource
 
-  /** MERGE INTO (the Delta `MERGE` role), copy-on-write: join `source`
-    * against the target on equality of `keys` (standard SQL `ON t.k =
-    * s.k` — NULL keys never match, so null-keyed source rows only ever
-    * insert), apply `whenMatched` to matched target rows, and (when
-    * `insertUnmatched`) append source rows matching no target key. File economics mirror [[delete]]:
-    * only target files that might contain a source key — pruned by the
-    * collected (bounded) source key set against manifest stats, like
-    * [[readWhereJoin]] — are rewritten; when the source key set exceeds
-    * `maxKeys` every file is considered touched (a bulk merge IS a
-    * table-sized operation). Pruning conservatism makes the unmatched
-    * set exact: untouched files provably contain no source key, so
-    * inserts anti-join only the touched slice.
-    *
-    * `source` must be UNIQUE on `keys` (checked — one aggregate over
-    * the source): duplicate source matches per target row are the
-    * classic silent-fanout bug and an error in every MERGE dialect.
-    * Commits a DELTA (op "merge"). Returns the new version, or the
-    * current one when the merge provably changes nothing.
-    *
-    * Incremental-consumer caveat: like [[delete]], a `MatchDelete` merge
-    * removes rows the file-level change feed cannot announce — keyed
-    * consumers that must propagate such removals should treat op="merge"
-    * windows from delete-merges as re-bootstrap boundaries. */
   /** Everything [[merge]] and [[mergeMoR]] validate and resolve before
     * their (different) execution plans — ONE implementation so the two
-    * cannot drift: key existence, source-duplicate refusal, bounded
-    * key collection → conservative file pruning, partition-layout
-    * consistency, and the no-silent-coercion schema check. */
+    * cannot drift. A local source batch is planned once into an RDD
+    * relation first ([[SessionIsolation.detachLocal]]). Then ONE source
+    * aggregate — key tuples with their row counts, most repeated first,
+    * at most `maxKeys + 1` of them — answers two questions: its first
+    * row holds the largest count, so any duplicate key is refused there
+    * however large the key set; its rows are the bounded key set that
+    * prunes target files (one catalyst `IN` per key column against
+    * manifest stats; more than `maxKeys` rows means every file is
+    * touched). Also: key existence, partition-layout consistency, and
+    * the no-silent-coercion schema check. */
   private final case class MergePrep(fs: FileSystem, st: State, target: DataFrame,
                                      touched: Seq[FileEntry], partKeys: Seq[String],
                                      srcN: DataFrame, overflow: Boolean)
 
-  private def prepareMerge(spark: SparkSession, root: String, source: DataFrame,
+  private def prepareMerge(spark: SparkSession, root: String, source0: DataFrame,
                            keys: Seq[String], maxKeys: Int, opName: String): MergePrep = {
     require(keys.nonEmpty, s"$opName: need at least one key column")
+    val source = SessionIsolation.detachLocal(source0)
     val fs = fsOf(spark, root)
     val st = current(spark, root).getOrElse(
       sys.error(s"manifest table $root has no committed version"))
     val target = readState(spark, root, st)
     require(keys.forall(target.columns.contains) && keys.forall(source.columns.contains),
       s"$opName: keys $keys must exist on both sides")
-    val dup = source.groupBy(keys.map(col).toIndexedSeq: _*)
-      .count().filter(col("count") > 1).limit(1).collect()
+    // the one source probe: first row = largest count, rows = key set
+    val n = s"_n_${graft.core.Cols.nonce}"
+    val probe = source.groupBy(keys.map(col).toIndexedSeq: _*)
+      .agg(count(lit(1)).as(n)).orderBy(col(n).desc).limit(maxKeys + 1).collect()
+    val dup = probe.headOption.filter(_.getLong(keys.size) > 1)
     require(dup.isEmpty,
-      s"$opName: source has duplicate keys (e.g. ${dup.headOption}) — " +
+      s"$opName: source has duplicate keys (e.g. $dup) — " +
         "a target row must match at most one source row")
-    // bounded source-key collection drives file pruning (readWhereJoin's
-    // per-column-isin shape); overflow = whole-table merge
-    val collected = source.select(keys.map(col).toIndexedSeq: _*)
-      .distinct().limit(maxKeys + 1).collect()
     // SQL MERGE ON equality: NULL keys never match (rows with any null
     // key on the source side only ever INSERT) — consistent with the
     // null-dropping probe set below, where a null-safe join would
     // secretly need null-keyed files kept
-    val keyVals = keys.indices.map(i => collected.map(_.get(i)).filter(_ != null).distinct)
+    val overflow = probe.length > maxKeys
+    val keyVals = keys.indices.map(i => probe.map(_.get(i)).filter(_ != null).distinct)
+    // per-column IN, conjunct-shaped so DataSkipping can evaluate it per
+    // file; overflow = whole-table merge
     val touched =
-      if (collected.length > maxKeys) st.files
+      if (overflow) st.files
       else if (keyVals.exists(_.isEmpty)) Seq.empty // no non-null tuple can match
       else DataSkipping.prune(st.files, keys.zip(keyVals).map { case (k, vs) =>
-        col(physicalName(st.tags, k)).isin(vs.toIndexedSeq: _*)
+        ColumnExpr.isIn(col(physicalName(st.tags, k)), vs.toIndexedSeq)
       }.reduce(_ && _), partitionTypes(st.tags))
     val partKeys = layoutOf(root, st)
     // a generated layout derives on the source side too: inserts land in
@@ -4796,9 +4820,38 @@ object ManifestTable {
       require(drift.isEmpty,
         s"$opName: source column types differ from the table (${drift.mkString("; ")})")
     }
-    MergePrep(fs, st, target, touched, partKeys, srcN, collected.length > maxKeys)
+    MergePrep(fs, st, target, touched, partKeys, srcN, overflow)
   }
 
+  /** MERGE INTO (the Delta `MERGE` role), copy-on-write: join `source`
+    * against the target on equality of `keys` (standard SQL `ON t.k =
+    * s.k` — NULL keys never match, so null-keyed source rows only ever
+    * insert), apply `whenMatched` to matched target rows, and (when
+    * `insertUnmatched`) append source rows matching no target key.
+    *
+    * Spark work per merge, besides CHECK constraints and the change
+    * feed: one source probe and one write. The probe ([[prepareMerge]])
+    * refuses a source that is not UNIQUE on `keys` — duplicate source
+    * matches per target row are the classic silent-fanout bug and an
+    * error in every MERGE dialect — and yields the bounded source key
+    * set. File economics mirror [[delete]]: only target files that
+    * might contain a source key, by that key set against manifest stats
+    * (like [[readWhereJoin]]), are rewritten; past `maxKeys` keys every
+    * file is touched (a bulk merge IS a table-sized operation). Pruning
+    * conservatism makes the unmatched set exact: untouched files
+    * provably contain no source key, so inserts anti-join only the
+    * touched slice.
+    *
+    * The rewrite-plus-insert result is written without first asking
+    * whether it is empty: zero-row files are dropped, and an empty result
+    * leaves no generation dir and commits the removes alone. Commits a
+    * DELTA (op "merge"). Returns the new version, or the current one when
+    * the merge provably changes nothing (no touched file, no insert).
+    *
+    * Incremental-consumer caveat: like [[delete]], a `MatchDelete` merge
+    * removes rows the file-level change feed cannot announce — keyed
+    * consumers that must propagate such removals should treat op="merge"
+    * windows from delete-merges as re-bootstrap boundaries. */
   def merge(spark: SparkSession, root: String, source: DataFrame,
             keys: Seq[String], whenMatched: WhenMatched = MatchUpdateAll,
             insertUnmatched: Boolean = true, maxKeys: Int = 100000,
@@ -4885,9 +4938,7 @@ object ManifestTable {
       }
     val outRows = normalizePartitionCols(rewritten.unionByName(inserts), partKeys)
     enforceConstraints(outRows, st.tags, root, "merge result")
-    val (entries, gen) =
-      if (outRows.isEmpty) (Seq.empty[FileEntry], None)
-      else { val (g, es) = writeGeneration(outRows, root, partKeys, st.tags); (es, Some(g)) }
+    val (entries, gen) = writeRows(outRows, root, partKeys, st.tags)
     if (entries.isEmpty && touched.isEmpty) return st.version // nothing to do
     require(entries.nonEmpty || touched.size < st.files.size,
       s"merge would remove every live row of $root (MatchDelete over all " +
@@ -5022,11 +5073,11 @@ object ManifestTable {
       // generation's parquet footers (one commit still — a manifest just
       // lists file entries, it does not care how many dirs hold them)
       val (reemitEntries, reemitGen) =
-        if (reemitN.isEmpty) (Seq.empty[FileEntry], None)
-        else { val (g, es) = writeGeneration(reemitN, root, partKeys, st.tags); (es, Some(g)) }
+        if (whenMatched == MatchDelete) (Seq.empty[FileEntry], None)
+        else writeRows(reemitN, root, partKeys, st.tags)
       val (insertEntries, insertGen) =
-        if (insertsN.isEmpty) (Seq.empty[FileEntry], None)
-        else { val (g, es) = writeGeneration(insertsN, root, partKeys, st.tags); (es, Some(g)) }
+        if (!insertUnmatched) (Seq.empty[FileEntry], None)
+        else writeRows(insertsN, root, partKeys, st.tags)
       val gens = reemitGen.toSeq ++ insertGen.toSeq
       def abortAll(): Unit = {
         gens.foreach(g => fs.delete(new Path(root, g), true))
@@ -5107,14 +5158,8 @@ object ManifestTable {
     val kept = normalizePartitionCols(transform(touchedDf), partKeys)
     if (opName == "update") // delete cannot introduce violations
       enforceConstraints(kept, st.tags, root, "update result")
-    // all rows of every touched file removed: commit removes only (an
-    // empty generation dir would be unlistable noise)
-    val (entries, gen) =
-      if (kept.isEmpty) (Seq.empty[FileEntry], None)
-      else {
-        val (g, es) = writeGeneration(kept, root, partKeys, st.tags)
-        (es, Some(g))
-      }
+    // all rows of every touched file removed: commit removes only
+    val (entries, gen) = writeRows(kept, root, partKeys, st.tags)
     // a removes-everything commit would leave a file-less table that the
     // design cannot read or upsert (readState demands >= 1 file): refuse
     // with the recovery path spelled out rather than brick the table
@@ -5161,7 +5206,7 @@ object ManifestTable {
     val gen = s"gen-${java.util.UUID.randomUUID().toString.take(12)}"
     val micros = withMicrosTimestamps(physicalizeDf(df, st.tags))
     Writers.sizedRewrite(micros.sparkSession, micros, small.map(_.bytes).sum,
-      keys, targetFileMB, new Path(root, gen).toString)
+      keys, targetFileMB, new Path(root, gen).toString, valueRows(st, small, keys))
     val entries = listGeneration(spark, root, gen, st.tags)
     val v = st.version + 1
     val (manifest, sidecar) = mkSnapshot(spark, root, v, big ++ entries,
@@ -5417,7 +5462,7 @@ object ManifestTable {
       case Some(p) =>
         val phys = physicalizeCol(p, st.tags)
         val partCols = layoutOf(root, st).toSet
-        val refs = org.apache.spark.sql.graftshim.ColumnExpr.expression(phys)
+        val refs = ColumnExpr.expression(phys)
           .collect { case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
             a.name }
         val bad = refs.filterNot(partCols.contains)
@@ -5472,7 +5517,7 @@ object ManifestTable {
     } else {
       val micros = withMicrosTimestamps(physicalizeDf(df, st.tags))
       Writers.sizedRewrite(micros.sparkSession, micros, liveBytes, partKeys,
-        targetFileMB, genPath.toString)
+        targetFileMB, genPath.toString, valueRows(st, eligible, partKeys))
     }
     val entries = listGeneration(spark, root, gen, st.tags)
     // row conservation: a rewrite that lost or duplicated rows must

@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Upsert
@@ -267,10 +269,18 @@ object Writers {
     * `keys` — possibly empty) into ~targetFileMB files under `out`,
     * preserving the partition layout. Skew-aware: each partition VALUE is
     * sized individually. Shared by [[compactParquet]] and
-    * [[ManifestTable.compact]]. */
+    * [[ManifestTable.compact]].
+    *
+    * `valueRows` is the row count of every partition value (values as
+    * their directory strings, null for the default partition) when the
+    * caller already knows them — a manifest records per-file row counts.
+    * Without it the counts take a grouped count over `df` (a Spark job,
+    * run once more inside the write's broadcast side). */
   private[sources] def sizedRewrite(spark: SparkSession, df: DataFrame, bytes: Long,
                                     keys: Seq[String], targetFileMB: Int,
-                                    out: String): Unit = {
+                                    out: String,
+                                    valueRows: Option[Seq[(Seq[Option[String]], Long)]] = None)
+      : Unit = {
     val targetBytes = targetFileMB * 1024L * 1024L
     val parts = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     if (keys.isEmpty)
@@ -279,18 +289,24 @@ object Writers {
       // repartition(parts, keys) would hash each partition VALUE into
       // exactly one task — a skewed partition (one value holding most of
       // the table) becomes ONE giant file and targetFileMB is silently
-      // ignored. Size per partition value instead: rows per value (cheap
-      // parquet-metadata count), bytes-per-row from the directory total,
-      // then a per-value salt spreads big values over ceil(value_bytes /
-      // target) files while small values stay at one.
+      // ignored. Size per partition value instead: rows per value,
+      // bytes-per-row from the directory total, then a per-value salt
+      // spreads big values over ceil(value_bytes / target) files while
+      // small values stay at one.
       val nonce = graft.core.Cols.nonce // caller columns must survive
       val (rowsC, nfC, saltC) = (s"_rows_$nonce", s"_nf_$nonce", s"_salt_$nonce")
-      val rowsPerValue = df.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as(rowsC))
+      val rowsPerValue = valueRows match {
+        case Some(vr) =>
+          import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+          spark.createDataFrame(
+            vr.map { case (vs, n) => Row.fromSeq(vs.map(_.orNull) :+ n) }.asJava,
+            StructType(keys.map(StructField(_, StringType)) :+ StructField(rowsC, LongType)))
+        case None => df.groupBy(keys.map(col): _*).agg(count(lit(1)).as(rowsC))
+      }
       // coalesce: an all-empty-files directory has an EMPTY aggregate,
       // and sum(empty) is NULL, not 0
-      val totalRows = math.max(1L, rowsPerValue
-        .agg(coalesce(sum(col(rowsC)), lit(0L))).collect()(0).getLong(0))
+      val totalRows = math.max(1L, valueRows.map(_.map(_._2).sum).getOrElse(
+        rowsPerValue.agg(coalesce(sum(col(rowsC)), lit(0L))).collect()(0).getLong(0)))
       val bytesPerRow = bytes.toDouble / totalRows
       val sized = rowsPerValue.withColumn(nfC,
         greatest(lit(1L), ceil(col(rowsC) * bytesPerRow / targetBytes)))
@@ -313,13 +329,14 @@ object Writers {
       } else xxhash64(hashableCols: _*)
       // null-safe key equality: a null partition value is a real
       // partition dir (k=__HIVE_DEFAULT_PARTITION__); a plain === join
-      // would silently DROP those rows from the rewritten data
+      // would silently DROP those rows from the rewritten data. Left
+      // join: a value the sizing missed writes one file, never vanishes
       val cond = keys.map(k => df(k) <=> sized(k)).reduce(_ && _)
-      val joined = keys.foldLeft(df.join(broadcast(sized), cond)) {
+      val joined = keys.foldLeft(df.join(broadcast(sized), cond, "left")) {
         (d, k) => d.drop(sized(k))
       }
       val salted = joined
-        .withColumn(saltC, pmod(saltSrc, col(nfC)))
+        .withColumn(saltC, pmod(saltSrc, coalesce(col(nfC), lit(1L))))
         .drop(nfC)
       salted.repartition(parts, (keys :+ saltC).map(col): _*)
         .drop(saltC)

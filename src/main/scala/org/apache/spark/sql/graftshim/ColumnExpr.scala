@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, In, Literal}
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Narrow bridge to Spark's `private[sql]` Column ↔ Expression
@@ -13,6 +13,14 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Expression
 object ColumnExpr {
   def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
   def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** `c IN (values)` as ONE catalyst `In` over plain literals.
+    * `Column.isin` wraps every value in its own Column, and each
+    * captures a call-site origin (a stack walk): at tens of thousands of
+    * key values that is seconds of driver time for a filter the
+    * analyzer and [[graft.sources.DataSkipping]] see identically. */
+  def isIn(c: Column, values: Seq[Any]): Column =
+    column(In(expression(c), values.map(Literal(_))))
 }
 
 /** Conf isolation for writes that need a non-default SQLConf posture
@@ -72,5 +80,25 @@ object SessionIsolation {
     val ds = df.asInstanceOf[classic.Dataset[_]]
     ds.sparkSession.internalCreateDataFrame(
       ds.queryExecution.toRdd, df.schema, isStreaming = false)
+  }
+
+  /** `df` planned ONCE into a `LogicalRDD` that keeps the original
+    * plan's statistics (the `Dataset.localCheckpoint` construction, minus
+    * the materialization), when `df` is a non-streaming frame whose
+    * analyzed plan reads only in-memory `LocalRelation`s; any other
+    * frame is returned as is. A local batch carries its rows INSIDE the
+    * plan, so every Dataset derived from it re-walks those rows in each
+    * analyzer and optimizer rule; the detached frame hands them over as
+    * an already-planned RDD. The kept `sizeInBytes` holds join planning
+    * (broadcast choices) where the local plan put it. File scans and
+    * streams are never detached: their plans must re-resolve. */
+  def detachLocal(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val leaves = ds.queryExecution.analyzed.collectLeaves()
+    if (df.isStreaming || !leaves.forall(_.isInstanceOf[LocalRelation])) df
+    else classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(
+        ds.queryExecution.toRdd, ds, isStreaming = false))
   }
 }

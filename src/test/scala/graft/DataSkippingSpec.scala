@@ -379,6 +379,27 @@ class DataSkippingSpec extends SparkSpec {
     assert(prunedP.count() == 100)
   }
 
+  test("readWhereJoin: one IN per key column keeps the per-value isin files and rows") {
+    val root = tmp() + "/fact"
+    ManifestTable.write((0 until 20000).map(i => (i.toLong, i * 2.0)).toDF("k", "v")
+      .repartitionByRange(16, col("k")), root)
+    val totalFiles = ManifestTable.current(spark, root).get.files.size
+    // a wide dim in two narrow ranges, with a null and an INT key type
+    // the analyzer widens to the fact's LONG
+    val keys = (1000 until 3000) ++ (15000 until 15100)
+    val dim = (keys.map(Option(_)) :+ None).toDF("dk")
+    val got = ManifestTable.readWhereJoin(spark, root, dim, Seq("k" -> "dk"))
+    // the per-value Column construction this path used before
+    val viaIsin = ManifestTable.readWhere(spark, root, col("k").isin(keys: _*))
+    assert(got.inputFiles.toSet == viaIsin.inputFiles.toSet)
+    assert(got.inputFiles.length < totalFiles,
+      s"pruned=${got.inputFiles.length} total=$totalFiles")
+    val want = viaIsin.join(dim, col("k") === col("dk"), "left_semi")
+    assert(got.orderBy("k").as[(Long, Double)].collect().toSeq ==
+      want.orderBy("k").as[(Long, Double)].collect().toSeq)
+    assert(got.count() == keys.size)
+  }
+
   test("readWhere: date-vs-timestamp filter returns matching rows (e2e)") {
     val root = tmp() + "/t"
     val df = Seq(
